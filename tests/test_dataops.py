@@ -3,6 +3,7 @@ tiny in-memory tables with hand-computed expectations."""
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,6 +52,32 @@ def test_ngram_jaccard_unpackable_ids_match_packed_path(spark, docs):
              for r in ngram_jaccard_pairs(shifted, 0.3).collect()}
     assert packed == plain
     assert packed  # non-vacuous
+
+
+@pytest.mark.parametrize("id_type", ["double", "string"])
+def test_ngram_jaccard_non_integral_ids_match_integer_ids(spark, docs, id_type):
+    """Only integral ids may take the packed pair key: fractional double
+    ids would be truncated by the long cast (docs 1.25 and 1.5 merging
+    into one id) and string ids cannot be cast at all. Both must give
+    the same pairs as the integer-id corpus."""
+    from weak_supervision_for_ner_spark.operators.dedup import ngram_jaccard_pairs
+
+    want = {(r["a"], r["b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(docs, 0.3).collect()}
+    if id_type == "double":
+        ids = {i: 1.0 + i / 4 for i in range(1, 6)}   # 1.25, 1.5, ...
+    else:
+        ids = {i: f"doc-{i}" for i in range(1, 6)}
+    back = {v: k for k, v in ids.items()}
+    relabeled = spark.createDataFrame(
+        [(ids[r["doc_id"]], r["text"]) for r in docs.collect()],
+        f"doc_id {id_type}, text string",
+    )
+    out = ngram_jaccard_pairs(relabeled, 0.3)
+    assert out.schema["a"].dataType.simpleString() == id_type
+    got = {(back[r["a"]], back[r["b"]]): r["jaccard"] for r in out.collect()}
+    assert got == want
+    assert want  # non-vacuous
 
 
 def test_minhash_lsh_finds_exact_dups(spark, docs):
@@ -789,6 +816,32 @@ def test_lsh_and_ivf_numpy_rerank_parity(spark):
         npk = sorted(map(tuple, fn(emb, q, k=5, kernel="numpy", **kw).collect()))
         assert npk == jvm and jvm
     emb.unpersist()
+
+
+@pytest.mark.parametrize("missing_qid", [0, 4, 9])
+def test_numpy_rerank_batch_rejects_unknown_query_id(missing_qid):
+    """A candidate whose query id is not among the collected queries must
+    fail loudly: searchsorted alone would hand it the vector of the
+    query sorted next to it (before the first, between two, past the
+    last id)."""
+    import pandas as pd
+
+    from weak_supervision_for_ner_spark.operators.similarity import _rerank_batch
+
+    ids_b = np.array([1, 3, 5])
+    qm = np.array([[1.0, 0.0], [0.0, 1.0], [0.6, 0.8]])
+
+    def batch(qids):
+        return pd.DataFrame({
+            "query_id": qids,
+            "vec_id": [10 + i for i in range(len(qids))],
+            "embedding": [np.array([3.0, 4.0])] * len(qids),
+        })
+
+    ok = _rerank_batch(batch([1, 3, 5]), ids_b, qm, "vec_id", "embedding")
+    assert ok["cosine"].tolist() == [0.6, 0.8, 1.0]
+    with pytest.raises(ValueError, match="query ids absent"):
+        _rerank_batch(batch([1, missing_qid]), ids_b, qm, "vec_id", "embedding")
 
 
 def test_embedding_dedup_cap_requires_lsh_blocker(spark):

@@ -10,6 +10,7 @@ import pytest
 from weak_supervision_for_ner_spark.operators.aggregate import (
     N_SOURCES,
     N_STATES,
+    SOURCE_NAMES,
     decode_biluo,
     majority_vote,
     sequence_from_spans,
@@ -198,3 +199,52 @@ def test_encoded_observations_exact():
         assert np.array_equal(X, rebuilt)
         checked += 1
     assert checked > 0
+
+
+def test_log_caches_follow_in_place_parameter_writes():
+    """The per-task log tables are keyed on the parameter arrays'
+    identity, which an in-place write keeps: the parameter version must
+    invalidate them, or framelogprob/label would decode with stale
+    emissions or transitions."""
+    annotated = _small_corpus(20)
+    fitted = oracle_hmm_fit(annotated, n_iter=1)
+    other = oracle_hmm_fit(annotated, n_iter=1, seed=7)
+    doc = next(d for d in annotated if d["spans"])
+    X = sequence_from_spans(doc["spans"], len(doc["tokens"]))
+    keep = list(SOURCE_NAMES[: N_SOURCES // 2])
+
+    def model_with(params):
+        model = HMMAggregator(sources_to_keep=keep)
+        (model.startprob_, model.transmat_, model.emission_probs,
+         model.emission_priors) = (p.copy() for p in params)
+        return model
+
+    def params(model):
+        return (model.startprob_, model.transmat_, model.emission_probs,
+                model.emission_priors)
+
+    model = model_with(params(fitted))
+    Xm = model._apply_source_mask(X)
+    stale_frame = model.framelogprob(Xm)
+    stale_path, stale_conf = model.label(X)
+
+    # in-place emission write: excluded sources pinned to emit O
+    model._pin_excluded_emissions()
+    fresh = model_with(params(model))
+    assert not np.array_equal(stale_frame, fresh.framelogprob(Xm))
+    assert np.array_equal(model.framelogprob(Xm), fresh.framelogprob(Xm))
+    path, conf = model.label(X)
+    fresh_path, fresh_conf = fresh.label(X)
+    assert np.array_equal(path, fresh_path) and np.array_equal(conf, fresh_conf)
+    assert not np.array_equal(conf, stale_conf)
+
+    # in-place start/transition write, announced through the version
+    model.startprob_[:] = other.startprob_
+    model.transmat_[:] = other.transmat_
+    model._params_changed()
+    fresh = model_with(params(model))
+    with np.errstate(divide="ignore"):
+        assert np.array_equal(model._log_start_trans()[1], np.log(other.transmat_))
+    path, conf = model.label(X)
+    fresh_path, fresh_conf = fresh.label(X)
+    assert np.array_equal(path, fresh_path) and np.array_equal(conf, fresh_conf)

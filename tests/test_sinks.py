@@ -2,6 +2,9 @@
 fully functional; the iceberg path needs a catalog this sandbox lacks
 and must fail with an actionable message, not a bare stack trace."""
 
+import glob
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -31,6 +34,12 @@ def test_parquet_sink_roundtrip_partitioned(spark, tmp_path):
     pruned = back.filter(F.col("pred") == "acquired")
     files = {r[0] for r in pruned.select(F.input_file_name()).distinct().collect()}
     assert files and all("pred=acquired" in f for f in files)
+    # the rebalance exchange lets AQE coalesce a small write into one
+    # writer task: one file per partition directory, not one per task
+    pred_dirs = glob.glob(os.path.join(out, "pred=*"))
+    assert len(pred_dirs) == 2
+    for pred_dir in pred_dirs:
+        assert len(glob.glob(os.path.join(pred_dir, "*.parquet"))) == 1, pred_dir
 
 
 def test_write_graph_default_is_parquet(spark, tmp_path):

@@ -131,14 +131,12 @@ def mentions_from_annotated(annotated: DataFrame) -> DataFrame:
     )
 
 
-def write_mentions(
-    mentions: DataFrame, target: str, buckets: int = 32, fmt: str = "parquet"
-) -> None:
-    """Sink: salted repartition on url-hash (hot-domain skew, SURVEY.md
-    §4), source-partitioned for layer pruning. ``fmt="iceberg"`` writes
-    to a catalog table via writeTo/overwritePartitions
-    (sinks.write_table)."""
+def write_mentions(mentions: DataFrame, target: str, fmt: str = "parquet") -> None:
+    """Sink: rebalanced on url so a hot domain spreads over writers
+    (SURVEY.md §4) while AQE sizes the writer tasks, source-partitioned
+    for layer pruning. ``fmt="iceberg"`` writes to a catalog table via
+    writeTo/overwritePartitions (sinks.write_table)."""
     from weak_supervision_for_ner_spark.sinks import write_table
 
     write_table(mentions, target, fmt=fmt, partition_by=("source",),
-                bucket_col="url", buckets=buckets)
+                bucket_col="url")

@@ -32,7 +32,10 @@ materialize a quadratic intermediate; they are the operators to run at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
+
+# doc_id dtypes whose values cast to long without loss
+_PACKABLE_ID_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
 def exact_duplicates(
@@ -113,19 +116,25 @@ def ngram_jaccard_pairs(
     # this operator's dominant cost (127M rows / 114M groups at sf1.0)
     # and halving the grouping key's width + hashing one column was
     # measured at -15% wall (24.2s -> 20.7s same box, identical rows).
-    # One cheap min/max probe guards the bijection: ids outside
-    # [0, 2^31) keep the plain two-column aggregation. The unpacked
-    # ids are cast back to the input dtype, so the output schema is
-    # unchanged on either path.
-    id_range = documents.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    ).first()
-    packable = (
-        id_range is not None and id_range["lo"] is not None
-        and id_range["lo"] >= 0 and id_range["hi"] < (1 << 31)
-    )
+    # Only integral ids can be packed: a fractional id would be
+    # truncated by the cast (distinct docs merging into one pair) and a
+    # string id cannot be cast at all, so every other dtype keeps the
+    # plain two-column aggregation without probing. For integral ids
+    # one cheap min/max probe guards the bijection: ids outside
+    # [0, 2^31) keep the plain aggregation too. The unpacked ids are
+    # cast back to the input dtype, so the output schema is unchanged
+    # on either path.
+    id_type = documents.schema["doc_id"].dataType
+    packable = isinstance(id_type, _PACKABLE_ID_TYPES)
     if packable:
-        id_type = documents.schema["doc_id"].dataType
+        id_range = documents.agg(
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        ).first()
+        packable = (
+            id_range is not None and id_range["lo"] is not None
+            and id_range["lo"] >= 0 and id_range["hi"] < (1 << 31)
+        )
+    if packable:
         inter = (
             pairs.select(
                 (F.col("a").cast("long") * F.lit(1 << 32)
@@ -658,7 +667,6 @@ def mask_repeated_spans(
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     out_schema = T.StructType([
         documents.schema[id_col],

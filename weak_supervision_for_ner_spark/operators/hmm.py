@@ -135,6 +135,13 @@ class HMMAggregator:
         self.emission_priors = None
         self.emission_probs = None
         self.history: list[float] = []
+        self._params_version = 0
+
+    def _params_changed(self) -> None:
+        """Invalidate the cached log tables. The caches are keyed on the
+        parameter arrays' identity, which an in-place write does not
+        change, so every method that writes the parameters calls this."""
+        self._params_version = getattr(self, "_params_version", 0) + 1
 
     # -- priors --------------------------------------------------------
 
@@ -163,6 +170,7 @@ class HMMAggregator:
         onehot[:, 0] = 1.0
         self.emission_probs[self._excluded] = onehot
         self.emission_priors[self._excluded] = onehot
+        self._params_changed()
 
     def initialise(self, init_counts, trans_counts, obs_counts) -> None:
         """Build priors from corpus count aggregations
@@ -193,6 +201,7 @@ class HMMAggregator:
 
         self._initialise_emissions(obs_counts)
         self._pin_excluded_emissions()
+        self._params_changed()
 
     def _initialise_emissions(self, obs_counts: np.ndarray, strength: float = 1000.0):
         """Emission priors from SOURCE_PRIORS P/R with boundary-error x5
@@ -251,29 +260,33 @@ class HMMAggregator:
 
     def _emission_log_cache(self):
         """(log B[:, :, 0], its source-sum) — recomputed only when the
-        emission tensor object changes (per EM iteration / per task),
-        not per document: np.log of the 37x77 slice plus two errstate
-        context switches per doc were ~15% of framelogprob (r7)."""
+        emission tensor object or the parameter version changes (per EM
+        iteration / per task), not per document: np.log of the 37x77
+        slice plus two errstate context switches per doc were ~15% of
+        framelogprob (r7)."""
         ep = self.emission_probs
+        version = getattr(self, "_params_version", 0)
         cache = getattr(self, "_logB0_cache", None)
-        if cache is None or cache[0] is not ep:
+        if cache is None or cache[0] is not ep or cache[1] != version:
             with np.errstate(divide="ignore"):
                 logB0 = np.log(ep[:, :, 0])  # (S, K)
-            cache = (ep, logB0, logB0.sum(axis=0))
+            cache = (ep, version, logB0, logB0.sum(axis=0))
             self._logB0_cache = cache
-        return cache[1], cache[2]
+        return cache[2], cache[3]
 
     def _log_start_trans(self):
         """Cached (log startprob, log transmat) for Viterbi decode —
         the decode pass is stateless, so these are per-task constants
         that were being re-logged per document (6k np.log calls/doc)."""
         sp, tm = self.startprob_, self.transmat_
+        version = getattr(self, "_params_version", 0)
         cache = getattr(self, "_lst_cache", None)
-        if cache is None or cache[0] is not sp or cache[1] is not tm:
+        if (cache is None or cache[0] is not sp or cache[1] is not tm
+                or cache[2] != version):
             with np.errstate(divide="ignore"):
-                cache = (sp, tm, np.log(sp), np.log(tm))
+                cache = (sp, tm, version, np.log(sp), np.log(tm))
             self._lst_cache = cache
-        return cache[2], cache[3]
+        return cache[3], cache[4]
 
     def framelogprob(self, X: np.ndarray) -> np.ndarray:
         """log Σ_sources X·emissionᵀ with masked -inf and the
@@ -389,6 +402,7 @@ class HMMAggregator:
         counts = self.emission_priors + obs
         probs = counts / (counts + 1e-100).sum(axis=2, keepdims=True)
         self.emission_probs = np.where(self.emission_probs > 0, probs, 0)
+        self._params_changed()
 
     def label(self, X: np.ndarray):
         """Viterbi decode one doc -> (state path, per-token confidence)
@@ -440,6 +454,7 @@ class HMMAggregator:
         self.transmat_ = data["transmat"]
         self.emission_priors = data["emission_priors"]
         self.emission_probs = data["emission_probs"]
+        self._params_changed()
         meta_path = (path[:-4] if path.endswith(".npz") else path) + ".meta.json"
         if os.path.exists(meta_path):
             with open(meta_path) as fd:

@@ -250,6 +250,31 @@ def _round_half_up6(x: "np.ndarray") -> "np.ndarray":
     return y
 
 
+def _rerank_batch(pdf, ids_b: np.ndarray, qm: np.ndarray, id_col: str, vec_col: str):
+    """Cosines of one candidate batch against the normalized query rows
+    ``qm`` (sorted ids ``ids_b``). A query id missing from ``ids_b``
+    raises: ``searchsorted`` would silently score it against a
+    neighbouring query's vector."""
+    import pandas as pd
+
+    qids = pdf["query_id"].to_numpy()
+    rows = np.searchsorted(ids_b, qids)
+    missing = ids_b[np.minimum(rows, len(ids_b) - 1)] != qids
+    if missing.any():
+        raise ValueError(
+            f"re-rank candidates reference {int(missing.sum())} query ids absent "
+            f"from the collected queries, e.g. {qids[missing][0]!r}"
+        )
+    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
+    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    cos = _round_half_up6(np.einsum("ij,ij->i", Xn, qm[rows]))
+    return pd.DataFrame({
+        "query_id": pdf["query_id"].values,
+        "neighbor_id": pdf[id_col].values,
+        "cosine": cos,
+    })
+
+
 def _numpy_pair_rerank(
     cand: DataFrame, queries: DataFrame, k: int,
     id_col: str, vec_col: str, max_queries: int = 100_000,
@@ -292,17 +317,8 @@ def _numpy_pair_rerank(
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_b, qm = bc.value
         for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            Q = qm[np.searchsorted(ids_b, pdf["query_id"].to_numpy())]
-            cos = _round_half_up6(np.einsum("ij,ij->i", Xn, Q))
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"].values,
-                "neighbor_id": pdf[id_col].values,
-                "cosine": cos,
-            })
+            if len(pdf):
+                yield _rerank_batch(pdf, ids_b, qm, id_col, vec_col)
 
     scored = cand.select("query_id", id_col, vec_col).mapInPandas(
         score, schema=out_schema

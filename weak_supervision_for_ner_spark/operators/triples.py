@@ -756,9 +756,9 @@ def materialize_graph(canonical: DataFrame) -> DataFrame:
 
 
 def write_graph(graph: DataFrame, target: str, fmt: str = "parquet") -> None:
-    """Graph sink, pred-partitioned for predicate pruning; url-hash
-    salted so hot domains don't serialize one writer (SURVEY.md §4).
-    ``fmt="iceberg"`` writes to a catalog table via
+    """Graph sink, pred-partitioned for predicate pruning; rebalanced on
+    url so hot domains don't serialize one writer (SURVEY.md §4) while
+    AQE sizes the writer tasks. ``fmt="iceberg"`` writes to a catalog table via
     writeTo/overwritePartitions (sinks.write_table)."""
     from weak_supervision_for_ner_spark.sinks import write_table
 

@@ -9,9 +9,12 @@ targets a catalog table when one is configured and fails with an
 actionable message when not.
 
 Layout contract shared by both formats:
-- a salted ``repartition(buckets, xxhash64(bucket_col))`` ahead of the
-  write spreads hot keys (hot-domain url skew, SURVEY.md §4) so no
-  writer task owns a mega-partition;
+- a ``rebalance`` hint on ``bucket_col`` ahead of the write hashes rows
+  on the full key (the url, not its domain: hot-domain skew, SURVEY.md
+  §4), and lets AQE size the writer tasks: small outputs coalesce into
+  a few tasks (one parquet file per partition directory instead of one
+  per task), oversized shuffle partitions are split, so no writer task
+  owns a mega-partition;
 - ``partition_by`` columns become directory partitions (parquet) or
   identity partition fields (Iceberg) — pred for the graph, source for
   mentions — giving consumers partition pruning either way.
@@ -30,7 +33,6 @@ def write_table(
     fmt: str = "parquet",
     partition_by: tuple[str, ...] = (),
     bucket_col: str | None = None,
-    buckets: int = 32,
 ) -> None:
     """Write ``df`` to ``target`` — a filesystem path (parquet) or a
     catalog table name (iceberg) — overwriting previous contents.
@@ -42,7 +44,7 @@ def write_table(
     if fmt not in FORMATS:
         raise ValueError(f"fmt must be one of {FORMATS}, got {fmt!r}")
     if bucket_col is not None:
-        df = df.repartition(buckets, F.xxhash64(bucket_col))
+        df = df.hint("rebalance", bucket_col)
 
     if fmt == "parquet":
         writer = df.write.mode("overwrite")
