@@ -491,3 +491,107 @@ def test_stage_dir_rejects_same_size_different_corpus(spark, tmp_path):
     with pytest.raises(ValueError, match="stage_dir"):
         run_kg_pipeline(spark, same_size_garbage, aggregator="majority",
                         stage_dir=stage)
+
+
+def test_hmm_spark_and_oracle_stop_on_the_same_iteration(spark):
+    """fit_spark and the single-node oracle share hmmlearn's stopping
+    rule (signed logprob delta below tol): run long enough to converge,
+    both stop after the same iteration with the same history."""
+    from weak_supervision_for_ner_spark.operators.hmm import HMMAggregator
+    from weak_supervision_for_ner_spark.plans.oracle import oracle_hmm_fit
+
+    annotated = annotate_pages(synth_pages(spark, 30, partitions=2)).persist()
+    model = HMMAggregator(n_iter=20).fit_spark(spark, annotated)
+    oracle_model = oracle_hmm_fit(
+        oracle_annotate([make_page(i)[0] for i in range(30)]), n_iter=20
+    )
+    assert len(model.history) < 20, "the fit should converge before n_iter"
+    assert len(model.history) == len(oracle_model.history)
+    for a, b in zip(model.history, oracle_model.history):
+        assert a == pytest.approx(b, rel=1e-9)
+    annotated.unpersist()
+
+
+def test_hmm_fit_and_decode_normalise_input_to_encoded_cells(spark):
+    """Span rows and encode_observations() cells are one observation
+    form: fitting and decoding either gives the same history,
+    parameters and mention rows, and a fit that encoded its input itself
+    releases that cache before it returns."""
+    import numpy as np
+
+    from weak_supervision_for_ner_spark.operators.hmm import (
+        HMMAggregator,
+        encode_observations,
+    )
+
+    annotated = annotate_pages(synth_pages(spark, 40, partitions=2)).persist()
+    encoded = encode_observations(annotated).persist()
+    annotated.count()
+    encoded.count()
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    from_spans = HMMAggregator(n_iter=2).fit_spark(spark, annotated)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    from_cells = HMMAggregator(n_iter=2).fit_spark(spark, encoded)
+
+    assert from_spans.history == from_cells.history
+    for name in ("startprob_", "transmat_", "emission_probs", "emission_priors",
+                 "startprob_prior", "transmat_prior"):
+        assert np.array_equal(getattr(from_spans, name), getattr(from_cells, name))
+    a = sorted(map(tuple, from_spans.decode_spark(spark, annotated).collect()))
+    b = sorted(map(tuple, from_cells.decode_spark(spark, encoded).collect()))
+    assert a == b and a
+    encoded.unpersist()
+    annotated.unpersist()
+
+
+def test_unknown_aggregator_rejected_before_any_job(spark, tmp_path):
+    """A misspelt aggregator must not silently build the majority graph
+    (and fingerprint a stage_dir under the wrong name): it raises before
+    any Spark job runs and before stage_dir is written."""
+    import os
+
+    pages = synth_pages(spark, 10, partitions=1)
+    stage = str(tmp_path / "stages_unknown")
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown-aggregator", "unknown aggregator must run no job")
+    try:
+        with pytest.raises(ValueError, match="aggregator"):
+            run_kg_pipeline(spark, pages, aggregator="snorkel", stage_dir=stage)
+        jobs = sc.statusTracker().getJobIdsForGroup("unknown-aggregator")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert not os.path.exists(stage)
+
+
+def test_stage_dir_survives_torn_metadata_write(spark, tmp_path, monkeypatch):
+    """A run killed while writing stage_dir metadata must not leave a
+    truncated file that the re-run reads as committed: json.dump writes
+    half of form_freqs.json and dies; the re-run still builds the clean
+    run's graph."""
+    import json
+
+    pages = synth_pages(spark, 30, partitions=2).persist()
+    stage = str(tmp_path / "stages_torn")
+    real_dump = json.dump
+
+    def torn_dump(obj, fd, *args, **kwargs):
+        if "form_freqs" in getattr(fd, "name", ""):
+            text = json.dumps(obj)
+            fd.write(text[: len(text) // 2])
+            raise OSError("simulated crash mid-write")
+        return real_dump(obj, fd, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="simulated"):
+        run_kg_pipeline(spark, pages, aggregator="majority", stage_dir=stage)
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    _, _, g_resumed = run_kg_pipeline(spark, pages, aggregator="majority", stage_dir=stage)
+    _, _, g_clean = run_kg_pipeline(spark, pages, aggregator="majority")
+    cols = sorted(g_clean.columns)
+    resumed = sorted(map(tuple, g_resumed.select(*cols).collect()))
+    clean = sorted(map(tuple, g_clean.select(*cols).collect()))
+    assert resumed == clean and clean
+    pages.unpersist()

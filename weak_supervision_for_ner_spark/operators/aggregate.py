@@ -1,5 +1,6 @@
 """Label aggregation: observation encoding, specialisation, majority
-voting, BILUO decoding.
+voting, BILUO decoding, and the per-doc stage builder that every
+aggregator's mention and triple outputs run through.
 
 Numpy re-implementations of the reference's UnifiedAnnotator core
 (labelling.py:116-213, 503-531), shared between the Spark operators
@@ -9,11 +10,12 @@ inside Arrow batches.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
 from weak_supervision_for_ner_spark.schema import (
     GENERIC_LABELS,
@@ -29,6 +31,11 @@ from weak_supervision_for_ner_spark.schema import (
 Span = tuple[int, int]
 Vals = tuple[tuple[str, float], ...]
 Layers = dict[str, dict[Span, Vals]]
+Mention = tuple[int, int, str, float]
+# decode(tokens, *observations) -> the doc's mentions
+Decoder = Callable[..., list[Mention]]
+# (output schema, rows(url, tokens, mentions) -> output rows)
+Emitter = tuple[T.StructType, Callable[[str, list, list[Mention]], list[tuple]]]
 
 N_STATES = len(POSITIONED_LABELS)
 N_SOURCES = len(SOURCE_NAMES)
@@ -280,17 +287,22 @@ def decode_biluo(states: np.ndarray, confidences: np.ndarray) -> dict[Span, tupl
     return spans
 
 
+def biluo_mentions(states: np.ndarray, confidences: np.ndarray) -> list[Mention]:
+    """:func:`decode_biluo` as the ``[(start, end, label, conf)]`` list
+    every per-doc decoder returns."""
+    return [(s, e, lab, conf)
+            for (s, e), (lab, conf) in decode_biluo(states, confidences).items()]
+
+
 # ---------------------------------------------------------------------------
-# Spark wrapper: majority-voter mentions from the annotated table
+# Per-doc stages: every aggregator maps one doc's tokens and observations
+# to [(start, end, label, conf)]; one Arrow batch loop turns a decoder
+# into mention rows or triple rows
 # ---------------------------------------------------------------------------
 
-def majority_voter_mentions(
-    annotated: DataFrame, nb_sources_threshold: int = 4,
-    source_name: str = "majority_voter",
-    sources_to_keep: list[str] | None = None,
-) -> DataFrame:
-    """Stateless narrow mapInPandas: annotated rows -> aggregated
-    mention rows (the relational form of MajorityVoter.annotate).
+def majority_decoder(nb_sources_threshold: int = 4,
+                     sources_to_keep: list[str] | None = None) -> Decoder:
+    """The majority voter's per-doc decoder over a doc's span rows.
 
     ``sources_to_keep`` restricts the vote to a source subset AFTER
     specialisation, matching the reference's UnifiedAnnotator order
@@ -298,24 +310,107 @@ def majority_voter_mentions(
     labelling.py:144-175)."""
     keep = None if sources_to_keep is None else set(sources_to_keep)
 
+    def decode(tokens, spans) -> list[Mention]:
+        layers = specialise_layers(layers_from_spans(list(spans)))
+        if keep is not None:
+            layers = {s: l for s, l in layers.items() if s in keep}
+        return biluo_mentions(
+            *majority_vote_sparse(layers, len(tokens), nb_sources_threshold)
+        )
+
+    return decode
+
+
+def mention_rows(source_name: str) -> Emitter:
+    """Emitter of MENTIONS_SCHEMA rows, one per decoded mention."""
+    def rows(url: str, tokens: list, mentions: list[Mention]) -> list[tuple]:
+        return [(url, source_name, s, e, label, conf, " ".join(tokens[s:e]))
+                for s, e, label, conf in mentions]
+
+    return MENTIONS_SCHEMA, rows
+
+
+def per_doc_stage(
+    df: DataFrame,
+    make_decoder: Callable[[], Decoder],
+    emit: Emitter,
+    obs_cols: tuple[str, ...] = ("spans",),
+    docs: Callable[[pd.DataFrame], Iterable[tuple]] | None = None,
+) -> DataFrame:
+    """The one narrow Arrow stage behind every aggregation output.
+
+    ``make_decoder`` runs once per task (a trained model rebuilds itself
+    from its broadcast there) and returns ``decode(tokens, *observations)``.
+    Each doc's mentions go to ``emit`` = (schema, rows(url, tokens,
+    mentions)). Docs are (url, tokens, *obs_cols) of ``df``, or
+    ``docs(batch)`` over ``df``'s own columns when the stage derives them
+    itself (annotating raw pages in-stage)."""
+    schema, rows_of = emit
+    columns = schema.fieldNames()
+    if docs is None:
+        df = df.select("url", "tokens", *obs_cols)
+
+        def docs(pdf: pd.DataFrame) -> Iterable[tuple]:
+            return zip(pdf["url"], pdf["tokens"], *(pdf[c] for c in obs_cols))
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        decode = make_decoder()
         for pdf in batches:
             rows = []
-            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                layers = specialise_layers(layers_from_spans(list(spans)))
-                if keep is not None:
-                    layers = {s: l for s, l in layers.items() if s in keep}
-                states, confs = majority_vote_sparse(
-                    layers, len(tokens), nb_sources_threshold
-                )
-                for (start, end), (label, conf) in decode_biluo(states, confs).items():
-                    rows.append(
-                        (url, source_name, start, end, label, conf,
-                         " ".join(tokens[start:end]))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "source", "start", "end", "label", "conf", "text"],
-            )
+            for url, tokens, *obs in docs(pdf):
+                tokens = list(tokens)
+                rows.extend(rows_of(url, tokens, decode(tokens, *obs)))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return annotated.mapInPandas(run, schema=MENTIONS_SCHEMA)
+    return df.mapInPandas(run, schema=schema)
+
+
+def sum_partials(stats: DataFrame, shapes: dict[str, tuple],
+                 tree_combine: bool | str = "auto", fanin: int = 32) -> dict:
+    """Driver-side sum of one-row-per-partition partial statistics (the
+    EM passes' map-side combine). Columns named in ``shapes`` are packed
+    float64 arrays of those shapes; the rest are numbers.
+
+    ``tree_combine`` adds a second level first — a groupBy(partition_id
+    % fanin) applyInPandas pre-sum — so the driver receives O(fanin)
+    rows at any partition count (HMM E-step rows are ~2.3 MB: a flat
+    collect at 10k partitions would be ~23 GB). "auto" turns it on at
+    defaultParallelism >= 128, so small/local runs skip the extra stage."""
+    sc = stats.sparkSession.sparkContext
+    if tree_combine is True or (tree_combine == "auto" and sc.defaultParallelism >= 128):
+        schema = stats.schema
+
+        def combine(_key, pdf):
+            out = {}
+            for f in schema.fields:
+                if f.name in shapes:
+                    total = sum(np.frombuffer(b).reshape(shapes[f.name]) for b in pdf[f.name])
+                    out[f.name] = [total.tobytes()]
+                elif f.dataType.typeName() in ("long", "integer"):
+                    out[f.name] = [int(pdf[f.name].sum())]
+                else:
+                    out[f.name] = [pdf[f.name].sum()]
+            return pd.DataFrame(out)
+
+        stats = (
+            stats.withColumn("g", F.spark_partition_id() % F.lit(fanin))
+            .groupBy("g").applyInPandas(combine, schema=schema)
+        )
+    rows = stats.collect()
+    return {
+        name: sum(np.frombuffer(r[name]).reshape(shapes[name]) if name in shapes
+                  else r[name] for r in rows)
+        for name in stats.columns
+    }
+
+
+def majority_voter_mentions(
+    annotated: DataFrame, nb_sources_threshold: int = 4,
+    source_name: str = "majority_voter",
+    sources_to_keep: list[str] | None = None,
+) -> DataFrame:
+    """Stateless narrow stage: annotated rows -> aggregated mention rows
+    (the relational form of MajorityVoter.annotate); see
+    :func:`majority_decoder` for ``sources_to_keep``."""
+    decode = majority_decoder(nb_sources_threshold, sources_to_keep)
+    return per_doc_stage(annotated, lambda: decode, mention_rows(source_name))

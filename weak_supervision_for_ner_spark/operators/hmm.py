@@ -30,17 +30,22 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from weak_supervision_for_ner_spark.operators.aggregate import (
     N_SOURCES,
     N_STATES,
-    decode_biluo,
+    Decoder,
+    Emitter,
+    Mention,
+    biluo_mentions,
+    mention_rows,
+    per_doc_stage,
     sequence_from_spans,
+    sum_partials,
 )
 from weak_supervision_for_ner_spark.schema import (
-    MENTIONS_SCHEMA,
     OUT_PRECISION,
     OUT_RECALL,
     POSITIONED_LABELS,
@@ -463,10 +468,6 @@ class HMMAggregator:
 
     # -- Spark driver loop -------------------------------------------------
 
-    @staticmethod
-    def _is_encoded(df: DataFrame) -> bool:
-        return "obs_t" in df.columns
-
     def fit_spark(
         self,
         spark: SparkSession,
@@ -478,16 +479,17 @@ class HMMAggregator:
     ) -> "HMMAggregator":
         """Baum-Welch over an annotated DataFrame.
 
+        Every pass reads the one observation form, the encoded cells
+        (``OBS_COLS``). An input without them is run through
+        :func:`encode_observations` once at entry; that encoded frame is
+        persisted while the fit runs and released before this returns.
+        A caller that also decodes can encode and persist once itself.
+
         Per iteration: ONE narrow mapInPandas pass emitting one
-        partial-stats row per partition (map-side combine), then either
-        a direct driver sum (few partitions) or a tree-combine level —
-        a groupBy(partition_id % fanin) applyInPandas that pre-sums the
-        ~2.3 MB obs matrices so the driver receives ``combine_fanin``
-        rows instead of one per partition (O(fanin) driver traffic at
-        any cluster size; at 10k partitions the flat collect would be
-        ~23 GB). ``tree_combine="auto"`` turns the extra level on when
-        defaultParallelism >= 128, so small/local runs skip the extra
-        stage. Then numpy M-step, checkpoint, re-broadcast.
+        partial-stats row per partition (map-side combine), summed on the
+        driver by ``sum_partials`` — through its tree-combine level when
+        ``tree_combine`` asks for it — then numpy M-step, checkpoint,
+        re-broadcast.
 
         Convergence follows the reference (hmmlearn ConvergenceMonitor,
         labelling.py:238): stop when the SIGNED logprob delta drops
@@ -495,23 +497,22 @@ class HMMAggregator:
         with a logged warning mirroring hmmlearn's monitor, and
         ``n_iter`` caps the loop either way.
         """
-        # the fit passes need only the token COUNT and the observation
-        # payload: projecting the token strings out here keeps them off
-        # the Arrow boundary for the prior pass and every EM iteration
-        # (guide §4.1: pass only the columns the function needs). An
-        # encode_observations() input additionally replaces the span
-        # rows with precomputed sparse tensor cells, so the
-        # layers/specialise/extract chain is not re-run per pass.
-        encoded = self._is_encoded(annotated)
-        if encoded:
-            annotated = annotated.select(
-                "n_tokens", "obs_t", "obs_s", "obs_k", "obs_v"
+        owned = "obs_t" not in annotated.columns
+        cells = encode_observations(annotated) if owned else annotated
+        # only the cells cross the Arrow boundary on the fit passes
+        cells = cells.select(*OBS_COLS)
+        if owned:
+            cells = cells.persist()
+        try:
+            return self._fit_cells(
+                spark, cells, checkpoint_dir, resume, tree_combine, combine_fanin
             )
-        else:
-            annotated = annotated.select(
-                F.size("tokens").alias("n_tokens"), "spans"
-            )
+        finally:
+            if owned:
+                cells.unpersist(blocking=True)
 
+    def _fit_cells(self, spark, cells, checkpoint_dir, resume, tree_combine,
+                   combine_fanin) -> "HMMAggregator":
         start_iter = 0
         if resume and checkpoint_dir:
             latest = _latest_checkpoint(checkpoint_dir)
@@ -535,9 +536,8 @@ class HMMAggregator:
 
         if self.startprob_ is None:
             counts = _collect_prior_counts(
-                annotated, self._best_coverage_source_index(), self._excluded,
+                cells, self._best_coverage_source_index(), self._excluded,
                 tree_combine=tree_combine, combine_fanin=combine_fanin,
-                encoded=encoded,
             )
             self.initialise(*counts)
             if checkpoint_dir:
@@ -546,36 +546,24 @@ class HMMAggregator:
         sc = spark.sparkContext
         prev_logprob = self.history[-1] if self.history else None
         for iteration in range(start_iter, self.n_iter):
-            params_bc = sc.broadcast(
-                (self.startprob_, self.transmat_, self.emission_probs,
-                 self.emission_priors, self.startprob_prior, self.transmat_prior)
-            )
-            agg = self
-            excluded = self._excluded
+            params_bc = self._broadcast_params(sc)
 
             def e_step_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                sp, tm, ep, epr, spp, tmp = params_bc.value
-                model = HMMAggregator.__new__(HMMAggregator)
-                model.startprob_, model.transmat_, model.emission_probs = sp, tm, ep
-                model._excluded = excluded
+                model = _task_model(params_bc.value)
                 logprob = 0.0
                 n_docs = 0
                 n_tokens = 0
                 start = np.zeros(N_STATES)
                 trans = np.zeros((N_STATES, N_STATES))
                 obs = np.zeros((N_SOURCES, N_STATES, N_STATES))
-                for pdf in batches:
-                    for n_toks, payload in _iter_observations(pdf, encoded):
-                        if n_toks == 0:
-                            continue
-                        X = _materialize_X(payload, n_toks, encoded)
-                        lp, st, tr, ob = model.e_step(X)
-                        logprob += lp
-                        start += st
-                        trans += tr
-                        obs += ob
-                        n_docs += 1
-                        n_tokens += int(n_toks)
+                for X in _observed_docs(batches):
+                    lp, st, tr, ob = model.e_step(X)
+                    logprob += lp
+                    start += st
+                    trans += tr
+                    obs += ob
+                    n_docs += 1
+                    n_tokens += len(X)
                 yield pd.DataFrame({
                     "logprob": [logprob], "n_docs": [n_docs], "n_tokens": [n_tokens],
                     "start": [start.tobytes()], "trans": [trans.tobytes()],
@@ -590,21 +578,15 @@ class HMMAggregator:
                 T.StructField("trans", T.BinaryType()),
                 T.StructField("obs", T.BinaryType()),
             ])
-            stats = annotated.mapInPandas(e_step_partition, schema=schema)
-            use_tree = tree_combine is True or (
-                tree_combine == "auto" and sc.defaultParallelism >= 128
+            totals = sum_partials(
+                cells.mapInPandas(e_step_partition, schema=schema),
+                {"start": (N_STATES,), "trans": (N_STATES, N_STATES),
+                 "obs": (N_SOURCES, N_STATES, N_STATES)},
+                tree_combine, combine_fanin,
             )
-            if use_tree:
-                stats = _tree_combine_stats(stats, schema, combine_fanin)
-            rows = stats.collect()
             params_bc.destroy()
-
-            curr_logprob = sum(r["logprob"] for r in rows)
-            start = sum(np.frombuffer(r["start"]).reshape(N_STATES) for r in rows)
-            trans = sum(np.frombuffer(r["trans"]).reshape(N_STATES, N_STATES) for r in rows)
-            obs = sum(np.frombuffer(r["obs"]).reshape(N_SOURCES, N_STATES, N_STATES) for r in rows)
-
-            self.m_step(start, trans, obs)
+            curr_logprob = totals["logprob"]
+            self.m_step(totals["start"], totals["trans"], totals["obs"])
             self.history.append(float(curr_logprob))
             if checkpoint_dir:
                 self.save(os.path.join(checkpoint_dir, f"iter_{iteration:03d}"),
@@ -625,53 +607,68 @@ class HMMAggregator:
             prev_logprob = curr_logprob
         return self
 
-    def decode_spark(self, spark: SparkSession, annotated: DataFrame) -> DataFrame:
-        """Stateless Viterbi decode: annotated -> HMM mention rows."""
-        params_bc = spark.sparkContext.broadcast(
-            (self.startprob_, self.transmat_, self.emission_probs)
+    def _broadcast_params(self, sc):
+        """Ship what :func:`_task_model` rebuilds a task-side model from."""
+        return sc.broadcast(
+            (self.startprob_, self.transmat_, self.emission_probs, self._excluded)
         )
-        source_name = self.source_name
-        excluded = self._excluded
 
-        encoded = self._is_encoded(annotated)
+    def decode_stage(self, annotated: DataFrame, emit: Emitter) -> DataFrame:
+        """Viterbi-decode every doc in one narrow stage and ``emit`` its
+        mentions (mention rows for :meth:`decode_spark`, triples for
+        ``triples.extract_triples_hmm_fused``). The decoder reads only
+        the encoded cells; span rows are encoded per doc on entry."""
+        params_bc = self._broadcast_params(annotated.sparkSession.sparkContext)
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sp, tm, ep = params_bc.value
-            model = HMMAggregator.__new__(HMMAggregator)
-            model.startprob_, model.transmat_, model.emission_probs = sp, tm, ep
-            model._excluded = excluded
-            for pdf in batches:
-                rows = []
-                for url, tokens, (n_toks, payload) in zip(
-                    pdf["url"], pdf["tokens"], _iter_observations(pdf, encoded)
-                ):
-                    if n_toks == 0:
-                        continue
-                    X = _materialize_X(payload, n_toks, encoded)
-                    path, confs = model.label(X)
-                    for (s, e), (lab, conf) in decode_biluo(path, confs).items():
-                        rows.append((url, source_name, s, e, lab, conf,
-                                     " ".join(tokens[s:e])))
-                yield pd.DataFrame(
-                    rows,
-                    columns=["url", "source", "start", "end", "label", "conf", "text"],
-                )
+        def make_decoder() -> Decoder:
+            model = _task_model(params_bc.value)
 
-        cols = ["url", "tokens", "n_tokens", "obs_t", "obs_s", "obs_k", "obs_v"] \
-            if encoded else ["url", "tokens", "spans"]
-        return annotated.select(*cols).mapInPandas(run, schema=MENTIONS_SCHEMA)
+            def decode(_tokens, n, t, s, k, v) -> list[Mention]:
+                if not n:
+                    return []
+                return biluo_mentions(*model.label(_X_from_cells(int(n), t, s, k, v)))
+
+            return decode
+
+        if "obs_t" in annotated.columns:
+            return per_doc_stage(annotated, make_decoder, emit, OBS_COLS)
+
+        # span input is encoded by the decoding task itself: an
+        # encode_observations stage would stream into this one and hold
+        # a second Python worker per task
+        def docs(pdf: pd.DataFrame):
+            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
+                yield (url, tokens, len(tokens), *_encode_doc(spans, len(tokens)))
+
+        return per_doc_stage(annotated.select("url", "tokens", "spans"),
+                             make_decoder, emit, docs=docs)
+
+    def decode_spark(self, spark: SparkSession, annotated: DataFrame) -> DataFrame:
+        """Stateless Viterbi decode: annotated (spans or encoded cells) ->
+        HMM mention rows."""
+        return self.decode_stage(annotated, mention_rows(self.source_name))
+
+
+def _task_model(params) -> HMMAggregator:
+    """The task-side model: e_step and label read only the parameters
+    :meth:`HMMAggregator._broadcast_params` ships."""
+    model = HMMAggregator.__new__(HMMAggregator)
+    model.startprob_, model.transmat_, model.emission_probs, model._excluded = params
+    return model
 
 
 # ---------------------------------------------------------------------------
-# Precomputed observation encoding (r7): the fit+decode flow re-ran the
+# Observation encoding (r7): the fit+decode flow re-ran the
 # layers_from_spans -> specialise_layers -> extract_sequence chain once
-# per pass (prior counts, every EM iteration, decode — 4x per doc for
-# the benchmark's fit(2)+decode). encode_observations harvests the
-# sparse cells of the FINAL tensor produced by the reference chain
-# itself (every (t, source, state) where X differs from the all-O
+# per pass (prior counts, every EM iteration, decode). encode_observations
+# harvests the sparse cells of the FINAL tensor produced by the reference
+# chain itself (every (t, source, state) where X differs from the all-O
 # default), so reconstruction is exact by construction — asserted
 # cell-for-cell by tests/test_hmm.py::test_encoded_observations_exact.
 # ---------------------------------------------------------------------------
+
+OBS_COLS = ("n_tokens", "obs_t", "obs_s", "obs_k", "obs_v")
+
 
 def encode_observations(annotated: DataFrame) -> DataFrame:
     """annotated(url, tokens, spans) -> (url, tokens, n_tokens,
@@ -679,33 +676,18 @@ def encode_observations(annotated: DataFrame) -> DataFrame:
     non-default cells as parallel primitive arrays (Arrow-friendly —
     struct arrays would decode to per-cell python dicts).
 
-    fit_spark/decode_spark detect the encoded columns and skip the
-    span-to-tensor derivation per pass; persist the encoded frame once
-    and feed it to both."""
+    These cells are the HMM's only observation form. ``fit_spark``
+    calls this at entry on span input; the decode stages encode each doc
+    with the same ``_encode_doc`` in their own task. Encode and persist
+    once to share the derivation between a fit and its decode."""
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls, toks_out, n_tokens = [], [], []
-            ats, ass, aks, avs = [], [], [], []
-            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                n = len(tokens)
-                urls.append(url)
-                toks_out.append(list(tokens))
-                n_tokens.append(n)
-                if n == 0:
-                    for a in (ats, ass, aks, avs):
-                        a.append([])
-                    continue
-                X = sequence_from_spans(list(spans), n)
-                base = np.zeros_like(X)
-                base[:, :, 0] = 1.0
-                t_i, s_i, k_i = np.nonzero(X != base)
-                ats.append(t_i.astype(np.int32))
-                ass.append(s_i.astype(np.int32))
-                aks.append(k_i.astype(np.int32))
-                avs.append(X[t_i, s_i, k_i])
+            n_tokens = [len(tokens) for tokens in pdf["tokens"]]
+            cells = [_encode_doc(spans, n) for spans, n in zip(pdf["spans"], n_tokens)]
             yield pd.DataFrame({
-                "url": urls, "tokens": toks_out, "n_tokens": n_tokens,
-                "obs_t": ats, "obs_s": ass, "obs_k": aks, "obs_v": avs,
+                "url": list(pdf["url"]), "tokens": [list(t) for t in pdf["tokens"]],
+                "n_tokens": n_tokens,
+                **{c: [cell[i] for cell in cells] for i, c in enumerate(OBS_COLS[1:])},
             })
 
     schema = T.StructType([
@@ -720,6 +702,16 @@ def encode_observations(annotated: DataFrame) -> DataFrame:
     return annotated.select("url", "tokens", "spans").mapInPandas(enc, schema=schema)
 
 
+def _encode_doc(spans, n: int) -> tuple[np.ndarray, ...]:
+    """One doc's (obs_t, obs_s, obs_k, obs_v): the cells where its
+    observation tensor differs from the all-O default."""
+    X = sequence_from_spans(list(spans), n)
+    base = np.zeros_like(X)
+    base[:, :, 0] = 1.0
+    t_i, s_i, k_i = np.nonzero(X != base)
+    return t_i.astype(np.int32), s_i.astype(np.int32), k_i.astype(np.int32), X[t_i, s_i, k_i]
+
+
 def _X_from_cells(n: int, ts, ss, ks, vs) -> np.ndarray:
     """Rebuild the dense float32 observation tensor from its
     non-default cells. Cell coordinates are unique (np.nonzero), so
@@ -732,62 +724,12 @@ def _X_from_cells(n: int, ts, ss, ks, vs) -> np.ndarray:
     return X
 
 
-def _iter_observations(pdf: pd.DataFrame, encoded: bool):
-    """Yield (n_tokens, payload) per row for either input form."""
-    if encoded:
-        for n, t, s, k, v in zip(pdf["n_tokens"], pdf["obs_t"], pdf["obs_s"],
-                                 pdf["obs_k"], pdf["obs_v"]):
-            yield int(n), (t, s, k, v)
-    elif "n_tokens" in pdf.columns:
-        for n, spans in zip(pdf["n_tokens"], pdf["spans"]):
-            yield int(n), spans
-    else:  # decode path on raw annotated rows
-        for tokens, spans in zip(pdf["tokens"], pdf["spans"]):
-            yield len(tokens), spans
-
-
-def _materialize_X(payload, n_toks: int, encoded: bool) -> np.ndarray:
-    if encoded:
-        t, s, k, v = payload
-        return _X_from_cells(n_toks, t, s, k, v)
-    return sequence_from_spans(list(payload), n_toks)
-
-
-def _tree_combine_stats(stats: DataFrame, schema, fanin: int,
-                        shapes: dict[str, tuple] | None = None) -> DataFrame:
-    """Second aggregation level for one-row-per-partition partials:
-    shuffle the stats rows to ``fanin`` groups and sum inside each with
-    applyInPandas, bounding driver traffic at O(fanin) rows regardless
-    of the input partition count. ``shapes`` names the BINARY columns
-    (packed ndarrays) with their array shapes; every other column is
-    summed numerically (floats stay float, ints stay int). Used by both
-    the per-iteration E-step pass and the one-time prior-count pass."""
-    if shapes is None:
-        shapes = {
-            "start": (N_STATES,),
-            "trans": (N_STATES, N_STATES),
-            "obs": (N_SOURCES, N_STATES, N_STATES),
-        }
-    fields = [(f.name, f.dataType.typeName()) for f in schema.fields]
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {}
-        for name, typ in fields:
-            if name in shapes:
-                total = sum(np.frombuffer(b).reshape(shapes[name]) for b in pdf[name])
-                out[name] = [total.tobytes()]
-            elif typ in ("long", "integer"):
-                out[name] = [int(pdf[name].sum())]
-            else:
-                out[name] = [pdf[name].sum()]
-        return pd.DataFrame(out)
-
-    return (
-        stats
-        .withColumn("g", F.spark_partition_id() % F.lit(fanin))
-        .groupBy("g")
-        .applyInPandas(lambda _key, pdf: combine(pdf), schema=schema)
-    )
+def _observed_docs(batches: Iterator[pd.DataFrame]) -> Iterator[np.ndarray]:
+    """The observation tensor of every non-empty doc in encoded batches."""
+    for pdf in batches:
+        for n, t, s, k, v in zip(*(pdf[c] for c in OBS_COLS)):
+            if n:
+                yield _X_from_cells(int(n), t, s, k, v)
 
 
 # ---------------------------------------------------------------------------
@@ -796,9 +738,8 @@ def _tree_combine_stats(stats: DataFrame, schema, fanin: int,
 # ---------------------------------------------------------------------------
 
 def _collect_prior_counts(
-    annotated: DataFrame, best_source_index: int, excluded: np.ndarray | None = None,
+    cells: DataFrame, best_source_index: int, excluded: np.ndarray | None = None,
     tree_combine: bool | str = "auto", combine_fanin: int = 32,
-    encoded: bool = False,
 ):
     """One partial-counts row per partition, then (like the E-step) an
     optional tree-combine level: each row is ~78 KB of packed matrices,
@@ -809,18 +750,14 @@ def _collect_prior_counts(
         init = np.zeros(N_STATES)
         trans = np.zeros((N_STATES, N_STATES))
         obs = np.zeros((N_SOURCES, N_STATES))
-        for pdf in batches:
-            for n_toks, payload in _iter_observations(pdf, encoded):
-                if n_toks == 0:
-                    continue
-                X = _materialize_X(payload, n_toks, encoded)
-                if excluded is not None and len(excluded):
-                    X[:, excluded, :] = 0.0
-                    X[:, excluded, 0] = 1.0
-                best = X[:, best_source_index, :].argmax(axis=1)
-                init[best[0]] += 1
-                np.add.at(trans, (best[:-1], best[1:]), 1.0)
-                obs += X.sum(axis=0)
+        for X in _observed_docs(batches):
+            if excluded is not None and len(excluded):
+                X[:, excluded, :] = 0.0
+                X[:, excluded, 0] = 1.0
+            best = X[:, best_source_index, :].argmax(axis=1)
+            init[best[0]] += 1
+            np.add.at(trans, (best[:-1], best[1:]), 1.0)
+            obs += X.sum(axis=0)
         yield pd.DataFrame({
             "init": [init.tobytes()], "trans": [trans.tobytes()], "obs": [obs.tobytes()],
         })
@@ -830,25 +767,12 @@ def _collect_prior_counts(
         T.StructField("trans", T.BinaryType()),
         T.StructField("obs", T.BinaryType()),
     ])
-    stats = annotated.mapInPandas(count_partition, schema=schema)
-    sc = annotated.sparkSession.sparkContext
-    use_tree = tree_combine is True or (
-        tree_combine == "auto" and sc.defaultParallelism >= 128
+    totals = sum_partials(
+        cells.mapInPandas(count_partition, schema=schema),
+        {"init": (N_STATES,), "trans": (N_STATES, N_STATES), "obs": (N_SOURCES, N_STATES)},
+        tree_combine, combine_fanin,
     )
-    if use_tree:
-        stats = _tree_combine_stats(
-            stats, schema, combine_fanin,
-            shapes={
-                "init": (N_STATES,),
-                "trans": (N_STATES, N_STATES),
-                "obs": (N_SOURCES, N_STATES),
-            },
-        )
-    rows = stats.collect()
-    init = sum(np.frombuffer(r["init"]).reshape(N_STATES) for r in rows)
-    trans = sum(np.frombuffer(r["trans"]).reshape(N_STATES, N_STATES) for r in rows)
-    obs = sum(np.frombuffer(r["obs"]).reshape(N_SOURCES, N_STATES) for r in rows)
-    return init, trans, obs
+    return totals["init"], totals["trans"], totals["obs"]
 
 
 def _quarantine_checkpoints(checkpoint_dir: str) -> None:

@@ -24,17 +24,21 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from weak_supervision_for_ner_spark.operators.aggregate import (
+    Decoder,
+    Mention,
     layers_from_spans,
+    mention_rows,
+    per_doc_stage,
     specialise_layers,
+    sum_partials,
 )
 from weak_supervision_for_ner_spark.schema import (
     GENERIC_LABELS,
     LABELS,
-    MENTIONS_SCHEMA,
     SOURCE_NAMES,
 )
 
@@ -186,24 +190,6 @@ class LabelModelAggregator:
             T.StructField("prior_c", T.BinaryType()),
             T.StructField("vote_c", T.BinaryType()),
         ])
-        # same driver-traffic bound as HMMAggregator.fit_spark: each
-        # partial row carries ~150 KB of vote counts, so beyond ~128
-        # partitions a groupBy(partition_id % fanin) pre-sum keeps the
-        # collect at O(fanin) rows
-        use_tree = tree_combine is True or (
-            tree_combine == "auto" and sc.defaultParallelism >= 128
-        )
-
-        def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            prior_c = sum(np.frombuffer(b).reshape(N_CLASSES) for b in pdf["prior_c"])
-            vote_c = sum(
-                np.frombuffer(b).reshape(N_CLASSES, len(SOURCE_NAMES), N_OUTCOMES)
-                for b in pdf["vote_c"]
-            )
-            return pd.DataFrame({
-                "loglik": [pdf["loglik"].sum()],
-                "prior_c": [prior_c.tobytes()], "vote_c": [vote_c.tobytes()],
-            })
         for _ in range(self.n_iter):
             params_bc = sc.broadcast((self.log_prior, self.log_conf, self.smoothing))
             def e_step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -224,63 +210,48 @@ class LabelModelAggregator:
                     "vote_c": [vote_c.tobytes()],
                 })
 
-            stats = annotated.mapInPandas(e_step, schema=schema)
-            if use_tree:
-                stats = (
-                    stats
-                    .withColumn("g", F.spark_partition_id() % F.lit(combine_fanin))
-                    .groupBy("g")
-                    .applyInPandas(lambda _key, pdf: combine(pdf), schema=schema)
-                )
-            rows = stats.collect()
+            totals = sum_partials(
+                annotated.mapInPandas(e_step, schema=schema),
+                {"prior_c": (N_CLASSES,),
+                 "vote_c": (N_CLASSES, len(SOURCE_NAMES), N_OUTCOMES)},
+                tree_combine, combine_fanin,
+            )
             params_bc.destroy()
-            prior_c = sum(
-                np.frombuffer(r["prior_c"]).reshape(N_CLASSES) for r in rows
-            )
-            vote_c = sum(
-                np.frombuffer(r["vote_c"]).reshape(N_CLASSES, len(SOURCE_NAMES), N_OUTCOMES)
-                for r in rows
-            )
-            self._m_step(prior_c, vote_c)
-            self.history.append(float(sum(r["loglik"] for r in rows)))
+            self._m_step(totals["prior_c"], totals["vote_c"])
+            self.history.append(float(totals["loglik"]))
         return self
 
     # -- decode ------------------------------------------------------------
 
-    def decode_doc(self, url: str, tokens: list, spans: list) -> list[tuple]:
+    def decode(self, tokens: list, spans: list) -> list[Mention]:
+        """The per-doc decoder: each candidate span whose posterior
+        argmax is an entity class, with that class's posterior."""
         ordered, obs = span_votes(
             list(spans), self.candidate_sources, self.sources_to_keep
         )
-        rows = []
         if not ordered:
-            return rows
+            return []
         gamma, _ = self._posteriors(obs)
+        out = []
         for (start, end), g in zip(ordered, gamma):
             c = int(g.argmax())
             if c > 0:
-                rows.append((url, self.source_name, start, end,
-                             LABELS[c - 1], float(g[c]),
-                             " ".join(tokens[start:end])))
-        return rows
+                out.append((start, end, LABELS[c - 1], float(g[c])))
+        return out
+
+    def decode_doc(self, url: str, tokens: list, spans: list) -> list[tuple]:
+        """One doc's mention rows (single-node form of decode_spark)."""
+        _schema, rows = mention_rows(self.source_name)
+        return rows(url, list(tokens), self.decode(tokens, spans))
 
     def decode_spark(self, spark: SparkSession, annotated: DataFrame) -> DataFrame:
         params_bc = spark.sparkContext.broadcast((self.log_prior, self.log_conf))
-        source_name, cand = self.source_name, self.candidate_sources
-        keep = self.sources_to_keep
+        cand, keep = self.candidate_sources, self.sources_to_keep
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            lp, lc = params_bc.value
+        def make_decoder() -> Decoder:
             model = LabelModelAggregator.__new__(LabelModelAggregator)
-            model.log_prior, model.log_conf = lp, lc
-            model.source_name, model.candidate_sources = source_name, cand
-            model.sources_to_keep = keep
-            for pdf in batches:
-                rows = []
-                for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                    rows.extend(model.decode_doc(url, list(tokens), list(spans)))
-                yield pd.DataFrame(
-                    rows,
-                    columns=["url", "source", "start", "end", "label", "conf", "text"],
-                )
+            model.log_prior, model.log_conf = params_bc.value
+            model.candidate_sources, model.sources_to_keep = cand, keep
+            return model.decode
 
-        return annotated.mapInPandas(run, schema=MENTIONS_SCHEMA)
+        return per_doc_stage(annotated, make_decoder, mention_rows(self.source_name))

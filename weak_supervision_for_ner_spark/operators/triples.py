@@ -22,13 +22,18 @@ iterative join with AQE handling skew.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql import types as T
 
 from weak_supervision_for_ner_spark.functions.lexicons import LEGAL_SUFFIXES as _LEGAL_SUFFIXES
+from weak_supervision_for_ner_spark.operators.aggregate import (
+    Emitter,
+    majority_decoder,
+    per_doc_stage,
+)
+from weak_supervision_for_ner_spark.operators.entity_correction import (
+    correct_spans_with_conf,
+)
 from weak_supervision_for_ner_spark.schema import TRIPLES_SCHEMA
 from weak_supervision_for_ner_spark.sources.gazetteer import RELATION_LEXICON
 
@@ -163,32 +168,33 @@ def extract_triples_from_doc(
     return out
 
 
+def triple_rows(correct: bool = False) -> Emitter:
+    """Emitter of TRIPLES_SCHEMA rows: [entity-correct →] the SVO rule
+    over each doc's decoded mentions. ``correct`` applies the 15-rule
+    entity-repair pass (spacy_wrapper.py:268-402) — row-local, so a
+    stage stays narrow."""
+    def rows(url: str, tokens: list, mentions: list) -> list[tuple]:
+        if correct:
+            mentions = correct_spans_with_conf(tokens, mentions)
+        return extract_triples_from_doc(url, tokens, mentions)
+
+    return TRIPLES_SCHEMA, rows
+
+
 def extract_triples_direct(pages: DataFrame, nb_sources_threshold: int = 4,
                            lang: str = "en", truecase: bool = False,
                            form_freqs: dict | None = None,
                            correct: bool = False) -> DataFrame:
-    """Maximal fusion: pages → annotate → specialise → majority-vote →
-    [entity-correct] → SVO triples in ONE Arrow stage. On the graph
-    path the span table never crosses the Arrow boundary at all — used
-    by the pipeline when the aggregator is per-doc recomputable
-    (majority voting).
+    """Maximal fusion: pages → annotate → majority vote → [entity-correct]
+    → SVO triples in ONE Arrow stage. On the graph path the span table
+    never crosses the Arrow boundary at all; a streaming source works
+    too, since the stage is stateless.
 
     ``truecase`` derives the corpus casing dictionary (one groupBy +
     bounded collect) and broadcasts it, exactly like ``annotate_pages``
     (pass ``form_freqs`` to reuse a precomputed dictionary — at real
-    scale derive it once and ship it). ``correct`` applies the 15-rule
-    entity-repair pass (spacy_wrapper.py:268-402) to the aggregated
-    mentions per doc — still row-local, so the stage stays narrow."""
-    from weak_supervision_for_ner_spark.operators.aggregate import (
-        decode_biluo,
-        layers_from_spans,
-        majority_vote_sparse,
-        specialise_layers,
-    )
+    scale derive it once and ship it)."""
     from weak_supervision_for_ner_spark.operators.annotate import annotate_batch
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
 
     selected = pages.filter(F.col("lang") == lang).select("url", "text")
     bc = None
@@ -201,159 +207,50 @@ def extract_triples_direct(pages: DataFrame, nb_sources_threshold: int = 4,
             form_freqs = collect_form_frequency_dict(selected)
         bc = selected.sparkSession.sparkContext.broadcast(form_freqs)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def docs(pdf: pd.DataFrame):
         freqs = bc.value if bc is not None else None
-        for pdf in batches:
-            rows = []
-            for url, (tokens, spans) in zip(
-                pdf["url"], annotate_batch(pdf["text"], form_freqs=freqs)
-            ):
-                layers = specialise_layers(layers_from_spans(spans))
-                states, confs = majority_vote_sparse(
-                    layers, len(tokens), nb_sources_threshold
-                )
-                ments = [
-                    (s, e, lab, conf)
-                    for (s, e), (lab, conf) in decode_biluo(states, confs).items()
-                ]
-                if correct:
-                    ments = correct_spans_with_conf(tokens, ments)
-                rows.extend(extract_triples_from_doc(url, tokens, ments))
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "subj_type", "pred", "obj", "obj_type", "url", "conf"],
-            )
+        annotated = annotate_batch(pdf["text"], form_freqs=freqs)
+        return ((url, tokens, spans) for url, (tokens, spans) in zip(pdf["url"], annotated))
 
-    return selected.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    decode = majority_decoder(nb_sources_threshold)
+    return per_doc_stage(selected, lambda: decode, triple_rows(correct), docs=docs)
 
 
 def extract_triples_fused(annotated: DataFrame, nb_sources_threshold: int = 4,
                           correct: bool = False) -> DataFrame:
-    """Zero-shuffle triple extraction: re-derive the majority-voter
-    mentions per doc (cheap vectorized numpy) INSIDE the same Arrow
-    batch and run the SVO rule — the whole pages→triples path stays one
-    narrow stage. Preferred in the pipeline over
-    :func:`extract_triples`, which exists for aggregators whose
-    mentions are not per-doc recomputable (e.g. a trained HMM).
-    ``correct`` applies the 15-rule repair pass per doc first."""
-    from weak_supervision_for_ner_spark.operators.aggregate import (
-        decode_biluo,
-        layers_from_spans,
-        majority_vote_sparse,
-        specialise_layers,
-    )
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                tokens = list(tokens)
-                layers = specialise_layers(layers_from_spans(list(spans)))
-                states, confs = majority_vote_sparse(
-                    layers, len(tokens), nb_sources_threshold
-                )
-                ments = [
-                    (s, e, lab, conf)
-                    for (s, e), (lab, conf) in decode_biluo(states, confs).items()
-                ]
-                if correct:
-                    ments = correct_spans_with_conf(tokens, ments)
-                rows.extend(extract_triples_from_doc(url, tokens, ments))
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "subj_type", "pred", "obj", "obj_type", "url", "conf"],
-            )
-
-    return annotated.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    """Zero-shuffle majority-path extraction over an annotated table:
+    re-vote each doc inside the Arrow batch and run the SVO rule. The
+    vote is per-doc and exact, so this equals joining the majority
+    mentions back."""
+    decode = majority_decoder(nb_sources_threshold)
+    return per_doc_stage(annotated, lambda: decode, triple_rows(correct))
 
 
 def extract_triples_hmm_fused(annotated: DataFrame, model,
                               correct: bool = False) -> DataFrame:
-    """Decode-fused HMM-path triple extraction: Viterbi-decode the
-    trained model and run [entity-correct →] the SVO rule per doc in
-    ONE Arrow stage over the annotated table — no mentions shuffle, no
-    join back (the HMM-path counterpart of :func:`extract_triples_fused`;
-    the trained params travel as a broadcast like ``decode_spark``).
-    Produces the same graph as ``extract_triples(annotated,
-    model.decode_spark(...))`` — asserted by the parity test."""
-    from weak_supervision_for_ner_spark.operators.aggregate import (
-        decode_biluo,
-        sequence_from_spans,
-    )
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
-
-    params_bc = annotated.sparkSession.sparkContext.broadcast(
-        (model.startprob_, model.transmat_, model.emission_probs)
-    )
-    excluded = model._excluded
-    model_cls = type(model)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sp, tm, ep = params_bc.value
-        m = model_cls.__new__(model_cls)
-        m.startprob_, m.transmat_, m.emission_probs = sp, tm, ep
-        m._excluded = excluded
-        for pdf in batches:
-            rows = []
-            for url, tokens, spans in zip(pdf["url"], pdf["tokens"], pdf["spans"]):
-                tokens = list(tokens)
-                if not tokens:
-                    continue
-                X = sequence_from_spans(list(spans), len(tokens))
-                path, confs = m.label(X)
-                ments = [
-                    (s, e, lab, conf)
-                    for (s, e), (lab, conf) in decode_biluo(path, confs).items()
-                ]
-                if correct:
-                    ments = correct_spans_with_conf(tokens, ments)
-                rows.extend(extract_triples_from_doc(url, tokens, ments))
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "subj_type", "pred", "obj", "obj_type", "url", "conf"],
-            )
-
-    return annotated.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    """Decode-fused HMM-path extraction: Viterbi-decode the trained
+    model and run [entity-correct →] the SVO rule per doc in ONE Arrow
+    stage — no mentions shuffle, no join back. Produces the same graph
+    as ``extract_triples(annotated, model.decode_spark(...))`` —
+    asserted by the parity test."""
+    return model.decode_stage(annotated, triple_rows(correct))
 
 
 def extract_triples(annotated: DataFrame, mentions: DataFrame,
                     correct: bool = False) -> DataFrame:
-    """Join aggregated mentions back onto tokens (co-partitioned equi
-    join on url) and run [entity-correct →] the SVO rule per doc
-    inside Arrow batches."""
-    from weak_supervision_for_ner_spark.operators.entity_correction import (
-        correct_spans_with_conf,
-    )
-
+    """Join aggregated mentions back onto tokens (equi join on url) and
+    run [entity-correct →] the SVO rule per doc — for mentions that were
+    exported or resumed rather than decoded in-stage."""
     grouped = mentions.groupBy("url").agg(
         F.collect_list(F.struct("start", "end", "label", "conf")).alias("ms")
     )
     joined = annotated.select("url", "tokens").join(grouped, "url")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, tokens, ms in zip(pdf["url"], pdf["tokens"], pdf["ms"]):
-                tokens = list(tokens)
-                ments = [
-                    (int(m["start"]), int(m["end"]), m["label"], float(m["conf"]))
-                    if isinstance(m, dict) else (int(m[0]), int(m[1]), m[2], float(m[3]))
-                    for m in ms
-                ]
-                if correct:
-                    ments = correct_spans_with_conf(tokens, ments)
-                rows.extend(extract_triples_from_doc(url, tokens, ments))
-            yield pd.DataFrame(
-                rows,
-                columns=["subj", "subj_type", "pred", "obj", "obj_type", "url", "conf"],
-            )
+    def decode(_tokens, ms) -> list:
+        return [(int(m["start"]), int(m["end"]), m["label"], float(m["conf"]))
+                for m in ms]
 
-    return joined.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    return per_doc_stage(joined, lambda: decode, triple_rows(correct), obs_cols=("ms",))
 
 
 # ---------------------------------------------------------------------------

@@ -91,7 +91,8 @@ def oracle_hmm_fit(annotated: list[dict], n_iter: int = 10, seed: int = 42) -> H
             ob += o2
         model.m_step(start, tr, ob)
         model.history.append(float(logprob))
-        if prev is not None and abs(logprob - prev) < model.tol * max(len(seqs), 1):
+        # fit_spark's rule (hmmlearn's monitor): the SIGNED delta below tol
+        if prev is not None and logprob - prev < model.tol:
             break
         prev = logprob
     return model

@@ -127,6 +127,17 @@ def _stage_materialize(
     return spark.read.parquet(path)
 
 
+def _write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to a temp file beside ``path`` and rename it
+    into place: a run killed mid-write leaves no truncated file that a
+    re-run would read as committed."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fd:
+        json.dump(obj, fd)
+    os.replace(tmp, path)
+
+
 def run_kg_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -144,7 +155,8 @@ def run_kg_pipeline(
     """pages -> (annotated, mentions, graph) DataFrames.
 
     aggregator: 'majority' (stateless, zero extra passes) or 'hmm'
-    (EM driver loop; params checkpointed per iteration).
+    (EM driver loop; params checkpointed per iteration); any other
+    value raises ValueError before any job or stage_dir write.
 
     ``truecase`` (default ON, mirroring the reference pipe which
     truecases every ≤25-token doc during parsing,
@@ -173,9 +185,15 @@ def run_kg_pipeline(
     instead of recomputing — so a job that died during canonicalization
     restarts without re-running the labelling or aggregation stages at
     all (the HMM additionally resumes EM mid-training from
-    ``checkpoint_dir``). Stage files are the job's own durable
-    checkpoints; clean them up after the final sink commits.
+    ``checkpoint_dir``). The majority path re-votes its triples over
+    the committed annotated stage instead of joining the mentions stage
+    back. Stage files are the job's own durable checkpoints; clean them
+    up after the final sink commits.
     """
+    if aggregator not in ("majority", "hmm"):
+        raise ValueError(
+            f"unknown aggregator {aggregator!r}; expected 'majority' or 'hmm'"
+        )
     lineage = Lineage(lineage_path)
 
     if stage_dir:
@@ -202,9 +220,7 @@ def run_kg_pipeline(
                     "the original flags"
                 )
         else:
-            os.makedirs(stage_dir, exist_ok=True)
-            with open(fp_path, "w") as fd:
-                json.dump(fingerprint, fd)
+            _write_json_atomic(fp_path, fingerprint)
 
     if truecase and form_freqs is None:
         from weak_supervision_for_ner_spark.operators.textstats import (
@@ -221,69 +237,57 @@ def run_kg_pipeline(
                 pages.filter(F.col("lang") == "en").select("url", "text")
             )
             if ff_path:
-                os.makedirs(stage_dir, exist_ok=True)
-                with open(ff_path, "w") as fd:
-                    json.dump(form_freqs, fd)
+                _write_json_atomic(ff_path, form_freqs)
             lineage.stage("truecase_dict", n_forms=len(form_freqs))
 
-    # The annotated table feeds the aggregator AND (on the hmm/reuse
-    # paths) the triple extraction; persist it so labelling runs once —
-    # durably (stage parquet) when resumability is requested, else in
-    # executor storage.
+    # The annotated table feeds the aggregator AND (except on the direct
+    # majority path) the triple extraction; persist it so labelling runs
+    # once — durably (stage parquet) when resumability is requested, else
+    # in executor storage.
     annotated = annotate_pages(pages, form_freqs=form_freqs)
-    mentions_resumed = False
     if stage_dir:
         annotated = _stage_materialize(spark, stage_dir, "annotated", annotated, lineage)
-        mentions_resumed = os.path.exists(
-            os.path.join(stage_dir, "mentions", "_SUCCESS")
-        )
     else:
         annotated = annotated.persist()
 
     model = None
-    if aggregator == "hmm" and not mentions_resumed:
-        model = HMMAggregator(n_iter=hmm_iters)
-        model.fit_spark(spark, annotated, checkpoint_dir=checkpoint_dir, resume=True)
-        mentions = model.decode_spark(spark, annotated)
-        lineage.stage("hmm_fit", annotated, iterations=len(model.history),
-                      logprob=model.history[-1] if model.history else None)
-    elif aggregator == "hmm":
-        mentions = None  # read below from the committed stage
+    if stage_dir and os.path.exists(os.path.join(stage_dir, "mentions", "_SUCCESS")):
+        mentions = spark.read.parquet(os.path.join(stage_dir, "mentions"))
+        lineage.stage("stage_resume_mentions")
     else:
-        mentions = majority_voter_mentions(annotated)
-    if stage_dir:
-        if mentions is None:  # hmm path resuming a committed stage
-            mentions = spark.read.parquet(os.path.join(stage_dir, "mentions"))
-            lineage.stage("stage_resume_mentions")
+        if aggregator == "hmm":
+            model = HMMAggregator(n_iter=hmm_iters)
+            model.fit_spark(spark, annotated, checkpoint_dir=checkpoint_dir, resume=True)
+            mentions = model.decode_spark(spark, annotated)
+            lineage.stage("hmm_fit", annotated, iterations=len(model.history),
+                          logprob=model.history[-1] if model.history else None)
         else:
+            mentions = majority_voter_mentions(annotated)
+        if stage_dir:
             mentions = _stage_materialize(spark, stage_dir, "mentions", mentions, lineage)
-    else:
-        mentions = mentions.persist()
+        else:
+            mentions = mentions.persist()
     lineage.stage("aggregate", mentions)
 
-    if (aggregator == "hmm" and model is not None and not stage_dir
-            and not mentions_consumed):
-        # decode-fused: Viterbi + SVO in one Arrow stage over the
-        # persisted annotated table — no mentions join on the graph
-        # path. Only when the decoded mentions are NOT also being
-        # materialized: a caller exporting mentions would otherwise pay
-        # the corpus Viterbi twice (once fused, once for the export).
+    # Extractors are called through this module's names (tracers hook
+    # them here). Majority re-votes per doc, which is exact, so it never
+    # joins mentions back: over pages when the graph is the only output,
+    # else over the annotated table that is materialized anyway (labelling
+    # runs once end-to-end). The HMM decodes fused with the SVO rule
+    # unless its mentions are exported or resumed — then it joins them
+    # rather than run the corpus Viterbi twice.
+    if aggregator == "majority":
+        if stage_dir or mentions_consumed or with_metrics:
+            raw_triples = extract_triples_fused(annotated, correct=entity_correction)
+        else:
+            raw_triples = extract_triples_direct(
+                pages, form_freqs=form_freqs, correct=entity_correction
+            )
+    elif model is None or stage_dir or mentions_consumed:
+        raw_triples = extract_triples(annotated, mentions, correct=entity_correction)
+    else:
         raw_triples = extract_triples_hmm_fused(
             annotated, model, correct=entity_correction
-        )
-    elif aggregator == "hmm" or stage_dir:
-        # resumed (or stage-durable) runs extract from the committed
-        # mention/annotated stages: one co-partitioned join, no re-fit
-        raw_triples = extract_triples(annotated, mentions, correct=entity_correction)
-    elif mentions_consumed or with_metrics:
-        # annotated gets materialized anyway — reuse its cache so the
-        # labelling stage executes exactly once end-to-end
-        raw_triples = extract_triples_fused(annotated, correct=entity_correction)
-    else:
-        # graph-only caller: maximally-fused single python stage over
-        # pages — span structs never cross Arrow on the graph path
-        raw_triples = extract_triples_direct(
-            pages, form_freqs=form_freqs, correct=entity_correction
         )
     if with_metrics:
         for row in stage_metrics(annotated).collect():
